@@ -1,37 +1,37 @@
 """A real pluggable source for the Graph-shaped tree listing: the PySpark
 Python Data Source API (Spark 4) upgrade of `manifest.walk_tree`.
 
-The reference lists a drive tree with driver-side recursion + cursor pages
-(collect_files_recursive NB:213-236, list_children_paged NB:204-211) and
-pushes `$filter`/`$select` to the service (NB:86/95/161 — O6 in SURVEY §2).
-This source reproduces that split with Spark's own source contract:
+The reference lists a drive tree once on the driver with recursion + cursor
+pages (collect_files_recursive NB:213-236, list_children_paged NB:204-211),
+keeps the file list, and pushes `$filter`/`$select` to the service
+(NB:86/95/161 — O6 in SURVEY §2). This source does the same through
+Spark's own source contract:
 
-- The DRIVER enumerates only the directory frontier (cheap: names, no file
-  stats) and plans ONE InputPartition PER DIRECTORY.
-- EXECUTORS page through their directory's listing and emit manifest rows —
-  the per-page fetching the reference did serially on the driver runs in
-  parallel across the cluster.
+- `partitions()` walks the tree breadth-first on the DRIVER and fetches
+  each listing page exactly once: folders extend the frontier, files become
+  manifest rows. It packs the rows into a few byte-balanced partitions, so
+  the tasks downstream (the copy's fetch+write) get even work; `read()`
+  only emits its partition's rows.
 - `pushFilters` accepts size comparisons and name prefix/equality filters —
   the engine-side equivalent of the reference's server-evaluated OData
-  `$filter` — so non-matching rows never leave the lister. Unsupported
-  filters are returned to Spark, which re-applies them (correctness never
-  depends on the pushdown).
+  `$filter`. Spark calls it before `partitions()` in the same planner
+  worker, so non-matching rows are dropped during the walk. Unsupported
+  filters are returned to Spark, which re-applies them.
 
-Two backends behind the same planning:
-- a local directory tree (same substitution as tests/test_copy.py), and
-- a LIVE paged-REST listing when `path` is an http(s) URL: every directory
-  is a JSON listing endpoint returning `{"value": [items...],
-  "@odata.nextLink": "...?cursor=..."}` pages — the reference's cursor walk
-  (NB:204-211) executed with real HTTP fetches (loopback-served in tests),
-  executors following each directory's cursor chain in parallel.
+Two backends behind the same walk: a local directory tree (same
+substitution as tests/test_copy.py), and a LIVE paged-REST listing when
+`path` is an http(s) URL — `{"value": [items...], "@odata.nextLink": ...}`
+pages (NB:204-211) over real HTTP, loopback-served in tests.
 """
 
 from __future__ import annotations
 
+import heapq
 import json
 import os
-from dataclasses import dataclass
-from urllib.request import urlopen
+import time
+from urllib.error import HTTPError
+from urllib.request import Request, urlopen
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -47,39 +47,47 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 
+from .manifest import MAX_TREE_DEPTH, iter_pages
+
 MANIFEST_DDL = "file_id string, name string, rel_path string, download_url string, size long"
 
 
-@dataclass
-class DirPartition(InputPartition):
-    dir_path: str  # filesystem path OR http(s) listing-endpoint URL
-    rel_base: str
-
-
-def _iter_pages(url: str, timeout: float = 30.0, auth=None):
-    """Follow a cursor-paged listing: GET url → {"value": [...],
-    "@odata.nextLink": next_url?} until no nextLink remains (the
-    reference's list_children_paged loop, NB:204-211). `auth` is an O3
-    token provider (sources/auth.py) supplying the bearer header the
-    reference sends on every Graph call (NB:53-59)."""
-    from urllib.error import HTTPError
-    from urllib.request import Request
-
-    while url:
+def _fetch_page(url: str, auth=None, timeout: float = 30.0) -> dict:
+    """GET one listing page: the fetch callable for `manifest.iter_pages`.
+    `auth` (sources/auth.py) supplies the bearer header the reference sends
+    on every Graph call (NB:53-59); a 401 refreshes the token once. A
+    throttled page (429/503) gets 3 attempts in all, execute_copy's
+    default, each after the server's Retry-After seconds."""
+    refreshed, attempt = False, 1
+    while True:
         headers = auth.auth_headers() if auth is not None else {}
         try:
             with urlopen(Request(url, headers=headers), timeout=timeout) as r:
-                page = json.load(r)
+                return json.load(r)
         except HTTPError as e:
-            if e.code == 401 and auth is not None:  # expired → refresh once
-                auth.invalidate()
-                headers = auth.auth_headers()
-                with urlopen(Request(url, headers=headers), timeout=timeout) as r:
-                    page = json.load(r)
+            if e.code == 401 and auth is not None and not refreshed:
+                auth.invalidate()  # revoked before its stated expiry
+                refreshed = True
+            elif e.code in (429, 503) and attempt < 3:
+                wait = e.headers.get("Retry-After", "")  # seconds or an HTTP-date
+                time.sleep(int(wait) if wait.isdigit() else 0.05 * 2**attempt)
+                attempt += 1
             else:
                 raise
-        yield from page.get("value", [])
-        url = page.get("@odata.nextLink")
+
+
+def _pack(rows: list[tuple], k: int) -> list[InputPartition]:
+    """Greedy largest-first packing of manifest rows into max(1, min(rows, k))
+    partitions: each row joins the one with the fewest bytes, then fewest
+    rows (so zero-byte files spread too). The heaviest partition ends at
+    most one largest file above the mean."""
+    bins = [(0, 0, i) for i in range(max(1, min(len(rows), k)))]
+    parts: list[list[tuple]] = [[] for _ in bins]
+    for row in sorted(rows, key=lambda r: r[4], reverse=True):
+        nbytes, nrows, i = bins[0]
+        parts[i].append(row)
+        heapq.heapreplace(bins, (nbytes + row[4], nrows + 1, i))
+    return [InputPartition(p) for p in parts]
 
 
 def _row_filter(filters: list[Filter]):
@@ -110,8 +118,8 @@ def _row_filter(filters: list[Filter]):
 
 
 class GraphManifestReader(DataSourceReader):
-    """Base reader: partition-per-directory planning, NO pushFilters —
-    merely defining pushFilters makes Spark demand the
+    """Base reader: driver-side walk, row-carrying partitions, NO
+    pushFilters — merely defining pushFilters makes Spark demand the
     `spark.sql.python.filterPushdown.enabled` conf, which a stock session
     lacks; the pushdown flavor is the opt-in subclass below."""
 
@@ -140,61 +148,50 @@ class GraphManifestReader(DataSourceReader):
             )
 
     def partitions(self):
-        # Frontier walk over DIRECTORIES only — the driver never touches
-        # file metadata; that cost is paid inside each partition's read().
-        # In http mode the driver pages each directory's listing just to
-        # find subfolders (cheap: names + facets), exactly the recursion
-        # the reference runs on the driver (NB:213-236) — but file-row
-        # emission happens in read(), parallel across executors.
-        parts = [DirPartition(self.root, "")]
-        frontier = [(self.root, "")]
+        keep = _row_filter(self.pushed)
+        rows = [r for r in self._walk() if keep(r[1], r[4])]
+        # the driver's CPUs stand in for the default parallelism, unseen here
+        return _pack(rows, len(os.sched_getaffinity(0)))
+
+    def _walk(self):
+        """Breadth-first over folders, each page fetched once, yielding
+        manifest rows. Visited folders are skipped and depth is bounded: a
+        `childrenUrl` pointing at an ancestor would otherwise loop forever."""
+        frontier, seen, depth = [(self.root, "")], {self.root}, 0
         while frontier:
+            if depth > MAX_TREE_DEPTH:
+                raise RuntimeError(f"tree deeper than max_depth={MAX_TREE_DEPTH}")
             nxt = []
             for d, base in frontier:
-                for name, child in self._subdirs(d):
+                for name, child, file_id, url, size in self._list(d):
                     rel = f"{base}/{name}" if base else name
-                    nxt.append((child, rel))
-                    parts.append(DirPartition(child, rel))
-            frontier = nxt
-        return parts
+                    if child is None:
+                        yield (file_id or rel, name, rel, url, size)
+                    elif child not in seen:
+                        seen.add(child)
+                        nxt.append((child, rel))
+            frontier, depth = nxt, depth + 1
 
-    def _subdirs(self, d: str):
+    def _list(self, d: str):
+        """One folder's items as (name, child folder or None, file_id,
+        download_url, size)."""
         if self.http:
-            for item in _iter_pages(d, auth=self.auth):
-                if "folder" in item and item.get("childrenUrl"):
-                    yield item["name"], item["childrenUrl"]
-        else:
-            for e in sorted(os.scandir(d), key=lambda e: e.name):
-                if e.is_dir():
-                    yield e.name, e.path
-
-    def read(self, partition: DirPartition):
-        keep = _row_filter(self.pushed)
-        base = partition.rel_base
-        if self.http:
-            for item in _iter_pages(partition.dir_path, auth=self.auth):
-                if "folder" in item:
-                    continue
-                name, size = item["name"], int(item.get("size", 0))
-                if not keep(name, size):
-                    continue
-                rel = f"{base}/{name}" if base else name
-                yield (
-                    item.get("id", rel),
-                    name,
-                    rel,
-                    item.get("@microsoft.graph.downloadUrl") or item.get("downloadUrl"),
-                    size,
-                )
+            for items in iter_pages(lambda u: _fetch_page(u, self.auth), d):
+                for item in items:
+                    if "folder" not in item:
+                        url = item.get("@microsoft.graph.downloadUrl") or item.get("downloadUrl")
+                        yield item["name"], None, item.get("id"), url, int(item.get("size", 0))
+                    elif item.get("childrenUrl"):
+                        yield item["name"], item["childrenUrl"], None, None, 0
             return
-        for e in sorted(os.scandir(partition.dir_path), key=lambda e: e.name):
-            if not e.is_file():
-                continue
-            size = e.stat().st_size
-            if not keep(e.name, size):
-                continue
-            rel = f"{base}/{e.name}" if base else e.name
-            yield (partition.dir_path + "/" + e.name, e.name, rel, e.path, size)
+        for e in sorted(os.scandir(d), key=lambda e: e.name):
+            if e.is_dir():
+                yield e.name, e.path, None, None, 0
+            elif e.is_file():
+                yield e.name, None, e.path, e.path, e.stat().st_size
+
+    def read(self, partition: InputPartition):
+        yield from partition.value
 
 
 class GraphManifestPushdownReader(GraphManifestReader):

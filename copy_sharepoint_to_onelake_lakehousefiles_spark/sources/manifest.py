@@ -41,6 +41,8 @@ MANIFEST_SCHEMA = T.StructType(
 # {"value": [driveItem...], "@odata.nextLink": url|None}
 PageFetcher = Callable[[str], dict]
 
+MAX_TREE_DEPTH = 64  # tree walks raise past this many levels: the cycle guard
+
 
 def iter_pages(fetch: PageFetcher, first_url: str) -> Iterator[list[dict]]:
     """Cursor-paged scan (generalizes list_children_paged, NB:204-211)."""
@@ -55,7 +57,7 @@ def walk_tree(
     fetch: PageFetcher,
     root_url: str,
     child_url: Callable[[str], str],
-    max_depth: int = 64,
+    max_depth: int = MAX_TREE_DEPTH,
 ) -> Iterator[dict]:
     """Breadth-first frontier walk over a driveItem tree.
 

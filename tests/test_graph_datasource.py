@@ -1,16 +1,20 @@
-"""Python Data Source for the tree listing: partition-per-directory planning,
-row parity with the driver-walk manifest, and filter pushdown semantics."""
+"""Python Data Source for the tree listing: one driver walk that fetches
+each listing page once (cycle guard, throttled-page retry), byte-balanced
+row-carrying partitions, row parity with the driver-walk manifest, and
+filter pushdown semantics."""
 
 import os
 
 from pyspark.sql import functions as F
 
+from copy_sharepoint_to_onelake_lakehousefiles_spark.sources import graph_datasource
 from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.graph_datasource import (
     GraphManifestDataSource,
     GraphManifestPushdownReader,
     GraphManifestReader,
 )
 from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.manifest import (
+    MANIFEST_SCHEMA,
     manifest_from_local_dir,
 )
 
@@ -49,14 +53,54 @@ def test_source_matches_driver_walk_manifest(spark, tmp_path):
     assert ("sub1/sub2/c.txt", 6) in via_source
 
 
-def test_partition_per_directory(tmp_path):
+def _cpus(monkeypatch, n):
+    monkeypatch.setattr(graph_datasource.os, "sched_getaffinity", lambda pid: set(range(n)))
+
+
+def test_partitions_hold_every_row_once(tmp_path):
     root = str(tmp_path / "tree")
     os.makedirs(root)
     _build_tree(root)
     reader = GraphManifestReader({"path": root})
     parts = reader.partitions()
-    rels = sorted(p.rel_base for p in parts)
-    assert rels == ["", "empty_dir", "sub1", "sub1/sub2"]
+    rows = [r for p in parts for r in reader.read(p)]
+    assert sorted((r[2], r[4]) for r in rows) == [("a.csv", 8), ("sub1/b.bin", 200), ("sub1/sub2/c.txt", 6)]
+    assert rows[0][0] == rows[0][3] and rows[0][0].startswith(root)  # local row shape
+    assert 1 <= len(parts) <= min(len(rows), len(os.sched_getaffinity(0)))
+
+
+def test_empty_root_one_empty_partition(spark, tmp_path):
+    root = str(tmp_path / "empty")
+    os.makedirs(root)
+    reader = GraphManifestReader({"path": root})
+    parts = reader.partitions()
+    assert len(parts) == 1 and list(reader.read(parts[0])) == []
+    _register(spark)
+    df = spark.read.format("graph_manifest").load(root)
+    assert df.schema == MANIFEST_SCHEMA and df.collect() == []
+
+
+def test_zero_byte_files_spread(tmp_path, monkeypatch):
+    root = tmp_path / "zeros"
+    root.mkdir()
+    for i in range(50):
+        (root / f"z{i:02d}").touch()
+    _cpus(monkeypatch, 4)
+    parts = GraphManifestReader({"path": str(root)}).partitions()
+    assert sorted(len(p.value) for p in parts) == [12, 12, 13, 13]
+
+
+def test_skewed_tree_is_byte_balanced(tmp_path, monkeypatch):
+    sizes = [1 + 40_000 // (i + 1) for i in range(60)]  # Zipf-like
+    for i, n in enumerate(sizes):
+        d = tmp_path / "skew" / f"d{i % 7}"
+        d.mkdir(parents=True, exist_ok=True)
+        (d / f"f{i:02d}").write_bytes(b"x" * n)
+    _cpus(monkeypatch, 4)
+    parts = GraphManifestReader({"path": str(tmp_path / "skew")}).partitions()
+    loads = [sum(r[4] for r in p.value) for p in parts]
+    assert len(parts) == 4 and sum(loads) == sum(sizes)
+    assert max(loads) <= sum(sizes) / 4 + max(sizes)
 
 
 def test_filter_pushdown_applies_in_reader(spark, tmp_path):
@@ -113,7 +157,8 @@ import pytest
 PAGE_SIZE = 2
 
 # drive tree: root has 3 files + 1 folder; the folder has 3 files → both
-# listings need two cursor pages at PAGE_SIZE=2
+# listings need two cursor pages at PAGE_SIZE=2. /list/loop holds a folder
+# that points at itself and one whose child points back at /list/loop.
 _TREE = {
     "/list/root": [
         {"id": "f1", "name": "a.bin", "size": 11, "downloadUrl": "http://x/a"},
@@ -126,20 +171,41 @@ _TREE = {
         {"id": "f5", "name": "e.txt", "size": 55, "downloadUrl": "http://x/e"},
         {"id": "f6", "name": "f.txt", "size": 66, "downloadUrl": "http://x/f"},
     ],
+    "/list/loop": [
+        {"id": "g1", "name": "g.bin", "size": 7, "downloadUrl": "http://x/g"},
+        {"id": "d2", "name": "self", "folder": {}, "childrenUrl": "/list/loop"},
+        {"id": "d3", "name": "sub", "folder": {}, "childrenUrl": "/list/loop/sub"},
+    ],
+    "/list/loop/sub": [
+        {"id": "h1", "name": "h.bin", "size": 8, "downloadUrl": "http://x/h"},
+        {"id": "d4", "name": "up", "folder": {}, "childrenUrl": "/list/loop"},
+    ],
 }
 
 
 class _ListingHandler(BaseHTTPRequestHandler):
     base = ""  # filled by fixture
-    hits = []  # every (path, skip) request seen — asserts real pagination
+    hits = []  # every (path, skip) request served — asserts real pagination
+    throttle = set()  # (path, skip) pages that answer 429 once
 
     def do_GET(self):  # noqa: N802
         u = urlparse(self.path)
-        items = _TREE.get(u.path)
+        if u.path.startswith("/list/deep/"):  # an endless chain of folders
+            n = int(u.path.rsplit("/", 1)[1])
+            items = [{"id": f"n{n}", "name": f"n{n}", "folder": {}, "childrenUrl": f"/list/deep/{n + 1}"}]
+        else:
+            items = _TREE.get(u.path)
         if items is None:
             self.send_error(404)
             return
         skip = int(parse_qs(u.query).get("skip", ["0"])[0])
+        if (u.path, skip) in type(self).throttle:
+            type(self).throttle.discard((u.path, skip))
+            self.send_response(429)
+            self.send_header("Retry-After", "0")
+            self.send_header("Content-Length", "0")
+            self.end_headers()
+            return
         type(self).hits.append((u.path, skip))
         window = items[skip : skip + PAGE_SIZE]
         page = {"value": []}
@@ -164,6 +230,7 @@ class _ListingHandler(BaseHTTPRequestHandler):
 @pytest.fixture()
 def listing_base():
     _ListingHandler.hits = []
+    _ListingHandler.throttle = set()
     srv = ThreadingHTTPServer(("127.0.0.1", 0), _ListingHandler)
     _ListingHandler.base = f"http://127.0.0.1:{srv.server_address[1]}"
     t = threading.Thread(target=srv.serve_forever, daemon=True)
@@ -193,11 +260,36 @@ def test_http_paged_listing_full_manifest(spark, listing_base):
     assert ("/list/docs", 2) in _ListingHandler.hits
 
 
-def test_http_mode_plans_partition_per_directory(listing_base):
-    reader = GraphManifestReader({"path": f"{listing_base}/list/root"})
-    parts = reader.partitions()
-    assert sorted(p.rel_base for p in parts) == ["", "docs"]
-    assert parts[1].dir_path.endswith("/list/docs")
+def test_http_mode_fetches_each_page_once(spark, listing_base):
+    _register(spark)
+    rows = spark.read.format("graph_manifest").load(f"{listing_base}/list/root").collect()
+    assert len(rows) == 6
+    assert sorted(_ListingHandler.hits) == [
+        ("/list/docs", 0), ("/list/docs", 2), ("/list/root", 0), ("/list/root", 2)
+    ]
+
+
+def _walk_http(base, root):
+    reader = GraphManifestReader({"path": f"{base}{root}"})
+    return sorted((r[2], r[4]) for p in reader.partitions() for r in reader.read(p))
+
+
+def test_http_walk_skips_visited_folders(listing_base):
+    assert _walk_http(listing_base, "/list/loop") == [("g.bin", 7), ("sub/h.bin", 8)]
+    assert sorted(_ListingHandler.hits) == [("/list/loop", 0), ("/list/loop", 2), ("/list/loop/sub", 0)]
+
+
+def test_http_walk_raises_past_max_depth(listing_base):
+    with pytest.raises(RuntimeError, match="max_depth=64"):
+        _walk_http(listing_base, "/list/deep/0")
+    assert len(_ListingHandler.hits) == 65
+
+
+def test_http_throttled_page_is_retried(listing_base):
+    _ListingHandler.throttle = {("/list/docs", 2)}
+    assert len(_walk_http(listing_base, "/list/root")) == 6
+    assert not _ListingHandler.throttle  # the 429 was really served
+    assert _ListingHandler.hits.count(("/list/docs", 2)) == 1
 
 
 def test_http_mode_pushdown_filters_at_source(spark, listing_base):
